@@ -772,3 +772,47 @@ def test_walk_primitives_mutated_slot_robustness():
     assert dom._CTABLEHIT(empty.cache, empty.patterns, "anything", False)
     assert dom._CTABLEHIT(empty.cache_m, empty.patterns, "anything", True)
     assert empty.regex.search("anything") is not None
+
+
+def test_unlikely_walk_owns_verdicts():
+    """unlikely_walk holds its own reference to each verdict (fresh from
+    `judge` or cached in `verdicts`) through the truth test: no leaked
+    or missing reference, and a raising __bool__ propagates."""
+    import sys
+
+    class Verdict:
+        def __init__(self, drop):
+            self.drop = drop
+
+        def __bool__(self):
+            if self.drop is None:
+                raise ValueError("verdict")
+            return self.drop
+
+    tree = dom.parse_html(
+        "<html><body><div class='ad'>a</div><p class='ad'>b</p>"
+        "<div id='keep'>c</div></body></html>")
+    verdicts = {}
+    made = []
+
+    def judge(key):
+        made.append(Verdict(key[0] == "ad"))
+        return made[-1]
+
+    # expected count: one list slot plus one dict value, like `made`
+    # and `verdicts` hold each verdict
+    control = Verdict(True)
+    held = ([control], {0: control})
+    expect = [sys.getrefcount(control)] * 2
+
+    dropped = dom._CUNLIKELY(tree, verdicts, judge, ("body", "html"))
+    assert [n.tag for n in dropped] == ["div", "p"]
+    assert len(made) == 2  # second 'ad' node hit the cache
+    assert [sys.getrefcount(v) for v in made] == expect
+    for _ in range(3):
+        dom._CUNLIKELY(tree, verdicts, judge, ("body", "html"))
+    assert len(made) == 2
+    assert [sys.getrefcount(v) for v in made] == expect
+    assert held
+    with pytest.raises(ValueError, match="verdict"):
+        dom._CUNLIKELY(tree, {}, lambda key: Verdict(None), ("body", "html"))

@@ -2512,8 +2512,12 @@ chtml_unlikely_walk(PyObject *self, PyObject *args)
                                          idv ? idv : c_empty);
             if (key == NULL)
                 goto fail;
+            /* `drop` is owned on both branches and held through
+             * PyObject_IsTrue, never re-borrowed from the dict */
             PyObject *drop = PyDict_GetItemWithError(verdicts, key);
-            if (drop == NULL) {
+            if (drop != NULL) {
+                Py_INCREF(drop);
+            } else {
                 if (PyErr_Occurred()) {
                     Py_DECREF(key);
                     goto fail;
@@ -2523,20 +2527,15 @@ chtml_unlikely_walk(PyObject *self, PyObject *args)
                     Py_DECREF(key);
                     goto fail;
                 }
-                int rc = PyDict_SetItem(verdicts, key, drop);
-                Py_DECREF(drop); /* dict holds it; borrowed below */
-                if (rc < 0) {
-                    Py_DECREF(key);
-                    goto fail;
-                }
-                drop = PyDict_GetItemWithError(verdicts, key);
-                if (drop == NULL) {
+                if (PyDict_SetItem(verdicts, key, drop) < 0) {
+                    Py_DECREF(drop);
                     Py_DECREF(key);
                     goto fail;
                 }
             }
             Py_DECREF(key);
             int truthy = PyObject_IsTrue(drop);
+            Py_DECREF(drop);
             if (truthy < 0)
                 goto fail;
             if (truthy) {

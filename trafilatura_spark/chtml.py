@@ -7,9 +7,12 @@ the system ``gcc`` at first import (cached by source digest under
 missing toolchain, failed compile, or failed import returns ``None`` and
 ``dom.py`` keeps the pure-Python builder — the accelerator is a strict
 drop-in (exact-tree differential pinned by tests/test_chtml.py), never a
-requirement.  Set ``TRAFILATURA_SPARK_NO_CHTML=1`` to force the
-pure-Python path (used by the differential tests themselves and as the
-production escape hatch).
+requirement.  Because the fallback runs at about half speed, an
+unavailable accelerator is reported by one ``RuntimeWarning`` per
+process, naming the ``.failed`` marker that holds the compiler output
+when the build failed.  Set ``TRAFILATURA_SPARK_NO_CHTML=1`` to force the
+pure-Python path quietly (used by the differential tests themselves and
+as the production escape hatch).
 
 Concurrent builds (e.g. 32 Spark Python workers cold-starting at once)
 are race-safe: each builder compiles to a unique temp file and
@@ -24,6 +27,7 @@ import os
 import subprocess
 import sys
 import tempfile
+import warnings
 
 _SOURCE = os.path.join(os.path.dirname(__file__), "_chtml.c")
 
@@ -33,6 +37,21 @@ def _cache_dir() -> str:
     if env:
         return env
     return os.path.join(os.path.expanduser("~"), ".cache", "trafilatura_spark")
+
+
+_warned = False
+
+
+def _unavailable(reason: str) -> None:
+    """Warn (once per process) that the pure-Python fallback will run."""
+    global _warned
+    if not _warned:
+        _warned = True
+        warnings.warn(
+            f"trafilatura_spark C accelerator unavailable ({reason}); "
+            "falling back to the pure-Python parser at about half speed",
+            RuntimeWarning, stacklevel=3)
+    return None
 
 
 def load(node_cls, void_elements, p_closers, p_close_barriers, implied_end,
@@ -52,8 +71,8 @@ def load(node_cls, void_elements, p_closers, p_close_barriers, implied_end,
         try:
             import importlib.resources as _res
             code = (_res.files("trafilatura_spark") / "_chtml.c").read_bytes()
-        except Exception:
-            return None
+        except Exception as exc:
+            return _unavailable(f"cannot read _chtml.c: {exc!r}")
     digest = hashlib.sha256(
         code + sys.version.encode() + sys.executable.encode()
     ).hexdigest()[:16]
@@ -67,7 +86,8 @@ def load(node_cls, void_elements, p_closers, p_close_barriers, implied_end,
         # failure writes a digest-keyed marker and later imports fall
         # back immediately.  A new source digest gets a fresh attempt.
         if os.path.exists(fail_marker):
-            return None
+            return _unavailable(f"build failed, compiler output in "
+                                f"{fail_marker}")
         try:
             os.makedirs(cache, exist_ok=True)
             import sysconfig
@@ -95,7 +115,8 @@ def load(node_cls, void_elements, p_closers, p_close_barriers, implied_end,
                         os.replace(mtmp, fail_marker)
                     except OSError:
                         pass
-                    return None
+                    return _unavailable(f"build failed, compiler output in "
+                                        f"{fail_marker}")
                 os.replace(tmp, so_path)  # atomic: racers converge
                 tmp = None
             finally:
@@ -104,8 +125,8 @@ def load(node_cls, void_elements, p_closers, p_close_barriers, implied_end,
                         os.unlink(tmp)
                     except OSError:
                         pass
-        except Exception:
-            return None
+        except Exception as exc:
+            return _unavailable(f"build error: {exc!r}")
     try:
         spec = importlib.util.spec_from_file_location(
             "trafilatura_spark._chtml", so_path)
@@ -119,5 +140,5 @@ def load(node_cls, void_elements, p_closers, p_close_barriers, implied_end,
                 mod.collect_metrics, mod.bucket_by_tag, mod.table_hit,
                 mod.attr_pair, mod.divs_to_rename, mod.brs_under_divs,
                 mod.unlikely_walk)
-    except Exception:
-        return None
+    except Exception as exc:
+        return _unavailable(f"cannot import {so_path}: {exc!r}")

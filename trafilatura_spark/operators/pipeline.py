@@ -12,7 +12,19 @@ Scale design (SURVEY.md §4.3):
   i.i.d. cost mix regardless of input file layout;
 - **memory**: callers should set
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` low (64-256) because
-  HTML payloads are multi-MB;
+  HTML payloads are multi-MB.  Worker GC policy: ``Node.parent``
+  back-pointers make every parse tree cyclic garbage (~666 cyclic
+  objects per doc on the bench option set, ~2,335 on default options).
+  Without a freeze each automatic collection rescans the whole warm
+  worker heap (pyspark, pandas, pyarrow, the engine's tables) to free
+  them: ~2.1 of ~3.6 ms per default-options doc.  So the first
+  ``extract_batches`` call in each Python worker process runs
+  ``gc.collect()`` then ``gc.freeze()`` (`_freeze_worker_heap`): the
+  warm heap moves to the permanent generation and later collections
+  walk only objects allocated since.  It runs once per process (Spark
+  reuses workers across tasks), the collector stays enabled, and no
+  per-doc tree is ever frozen, so worker memory stays bounded.
+  In-process ``bare_extraction`` callers are left alone;
 - **failure isolation**: a pathological document yields a
   ``status='error'`` row, never a task failure
   (/root/reference/lib/src/core.dart:333-335); with
@@ -23,6 +35,7 @@ Scale design (SURVEY.md §4.3):
 
 from __future__ import annotations
 
+import gc
 from dataclasses import asdict
 
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -83,6 +96,24 @@ def _result_row(doc_id: str, res) -> tuple:
     )
 
 
+_heap_frozen = False
+
+
+def _freeze_worker_heap() -> None:
+    """Move this process's warm heap into the permanent generation, once.
+
+    Module-level on purpose: the nested ``extract_batches`` is shipped by
+    value, so a flag in its globals would reset on every task, while this
+    function is pickled by reference and its flag lives as long as the
+    (reused) worker process."""
+    global _heap_frozen
+    if _heap_frozen:
+        return
+    _heap_frozen = True
+    gc.collect()
+    gc.freeze()
+
+
 def make_extract_batches(options: Options, serialize: str | None = None):
     """Build the mapInPandas generator.  ``options`` is closure-captured:
     it ships once per task with the serialized function (the Spark analog
@@ -108,6 +139,7 @@ def make_extract_batches(options: Options, serialize: str | None = None):
         from .serialize import determine_return_string
         from ..dom import Node
 
+        _freeze_worker_heap()
         opts = Options(**opt_dict)
         for pdf in batches:
             rows = []
@@ -188,15 +220,13 @@ def extract_documents_routed(df: DataFrame, options: Options | None = None,
     partition width ⇒ ~1 heavy doc per task, maximum parallelism on
     exactly the docs that straggle).
 
-    When it wins (measured, sf0.1 local[32], 5000 default pages):
-    RARE-HUGE tails — 9 docs at ~2.3 MB: 4.24 s unrouted → 3.74 s
-    routed (1.13×), because the heavy docs run from t=0 at full width
-    instead of landing on top of some task's full small-doc share.
-    When it loses — MODERATE tails (125 docs at ~145 KB): 1.48 s →
-    1.95 s, because hash salting already equalizes that mix and the
-    split only adds a stage.  Flip it on when the corpus has rare
-    multi-MB outliers (per-doc cost ≳ the whole small-pass wall), not
-    for ordinary weight spread.
+    Measured effect (BENCH_r05, sf0.1, 32 tasks, ~5000 default pages,
+    best of 4 reps): RARE-HUGE tails (9 docs at ~2.3 MB) 2.70 s
+    unrouted → 2.86 s routed (0.945×); MODERATE tails (125 docs at
+    ~145 KB) 1.10 s → 1.42 s (0.772×) — routing lost in both regimes.
+    For moderate tails hash salting already equalizes the mix and the
+    split only adds a stage.  Leave it off unless a measurement on the
+    actual corpus shows a gain.
 
     The heavy branch is unioned FIRST: task scheduling is FIFO across
     the union's stages, so heavy-first gives the few long tasks the
